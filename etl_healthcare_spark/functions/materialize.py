@@ -48,6 +48,17 @@ def _backend(df: DataFrame) -> str:
     )
 
 
+def _reliable_checkpoint(df: DataFrame, eager: bool) -> DataFrame:
+    """``df.checkpoint`` into the session's checkpoint directory, setting it
+    from ``SPARK_GRAFT_CHECKPOINT_DIR`` on first use."""
+    sc = df.sparkSession.sparkContext
+    if sc._jsc.sc().getCheckpointDir().isEmpty():
+        sc.setCheckpointDir(
+            os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR", "/tmp/etl_healthcare_spark_ckpt")
+        )
+    return df.checkpoint(eager=eager)
+
+
 def _materialize(df: DataFrame, eager: bool) -> DataFrame:
     backend = _backend(df)
     if backend == "local":
@@ -60,14 +71,7 @@ def _materialize(df: DataFrame, eager: bool) -> DataFrame:
             out.count()  # materialize every partition now (cache stores full rows)
         return out
     if backend == "reliable":
-        sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
-            sc.setCheckpointDir(
-                os.environ.get(
-                    "SPARK_GRAFT_CHECKPOINT_DIR", "/tmp/etl_healthcare_spark_ckpt"
-                )
-            )
-        return df.checkpoint(eager=eager)
+        return _reliable_checkpoint(df, eager)
     raise ValueError(
         f"unknown checkpoint backend {backend!r}: 'local', 'disk' or 'reliable'"
     )
@@ -99,12 +103,5 @@ def cut_lineage(df: DataFrame) -> DataFrame:
     disk -> reliable ``checkpoint`` instead; local/reliable behave as in
     ``materialize``."""
     if _backend(df) == "disk":
-        sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
-            sc.setCheckpointDir(
-                os.environ.get(
-                    "SPARK_GRAFT_CHECKPOINT_DIR", "/tmp/etl_healthcare_spark_ckpt"
-                )
-            )
-        return df.checkpoint(eager=True)
+        return _reliable_checkpoint(df, eager=True)
     return _materialize(df, eager=True)

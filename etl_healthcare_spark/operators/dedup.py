@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from ..functions.text import shingles_from_tokens, simhash16, tokens
 from ..functions.vectors import cosine, hyperplane_bucket_exact
 from ..functions.materialize import materialize, materialize_lazy
+from .exchange import fan_out
 
 
 def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
@@ -47,22 +48,14 @@ def minhash_signatures(
     ``ceil(n*width/64)`` sha256 digests per shingle — independent under the
     random-oracle model, so 16 minhashes cost 4 sha256 calls (see
     minhash_bands notes)."""
-    # repartition by doc: small single-file inputs otherwise run the whole
-    # hash stage on one core, and hashpartitioning(doc) already satisfies the
-    # downstream groupBy("doc") so the shuffle is not repeated.  Explicit
-    # partition count: AQE would coalesce a bare repartition("doc") down to
-    # ~2 tasks (it sizes by bytes) and serialize this CPU-bound stage.
-    # Tokenize AFTER the exchange (round-11): a projection below the
+    # Tokenize AFTER the fan-out (round-11): a projection below the
     # repartition evaluates MAP-SIDE at scan parallelism — the 16 MB-split
     # local scan is 1 task, so the regex ran serially (probed 0.24 -> 0.14 s
     # min-of-6 at sf0.1 for the tokenize stage); shuffling the raw text
     # instead of the token array moves no more bytes.
-    npart = df.sparkSession.sparkContext.defaultParallelism
-    tok = (
-        df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__raw"))
-        .repartition(npart, "doc")
-        .select("doc", tokens(F.col("__raw")).alias("t"))
-    )
+    tok = fan_out(
+        df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__raw")), "doc"
+    ).select("doc", tokens(F.col("__raw")).alias("t"))
     sh = tok.select(
         "doc",
         F.explode(F.array_distinct(shingles_from_tokens(F.col("t"), 3))).alias("s"),
@@ -199,14 +192,8 @@ def minhash_lsh_pairs(
 
 
 def simhash_fingerprints(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    # repartition: fan the 16-bit-x-sha256-per-token compute out of a
-    # single-file partition.  NB: select AFTER repartition — the projection
-    # sits above the exchange, so the regex+sha stage already runs
-    # post-shuffle at full parallelism (unlike minhash_signatures' old
-    # select-then-repartition chain, plan-verified round-11)
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, F.col(id_col)).select(
-        F.col(id_col), simhash16(F.col(text_col)).alias("simhash")
-    )
+    # select AFTER the fan-out, so the regex+sha stage runs post-shuffle
+    return fan_out(df, F.col(id_col)).select(F.col(id_col), simhash16(F.col(text_col)).alias("simhash"))
 
 
 def simhash_dup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -223,10 +210,8 @@ def _distinct_shingles(df: DataFrame, text_col: str, id_col: str, k: int) -> Dat
     """(doc, shingle) — the distinct k-word shingle set of every document,
     fanned out of single-file partitions, regex post-shuffle (see
     minhash_signatures note)."""
-    npart = df.sparkSession.sparkContext.defaultParallelism
     return (
-        df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__raw"))
-        .repartition(npart, "doc")
+        fan_out(df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__raw")), "doc")
         .select("doc", tokens(F.col("__raw")).alias("t"))
         .select("doc", F.explode(F.array_distinct(shingles_from_tokens(F.col("t"), k))).alias("shingle"))
     )
@@ -265,13 +250,9 @@ def ngram_jaccard_pairs(
     jaccard is a documented lower bound for pairs touching dropped shingles).
     For the exact production shape, verify LSH candidates instead:
     ``ngram_jaccard_verify(df, minhash_lsh_pairs(df, ...))``."""
+    raw = df.select(F.col(id_col).alias("doc"), F.col(block_col).alias("blk"), F.col(text_col).alias("__raw"))
     sh = (
-        df.select(
-            F.col(id_col).alias("doc"),
-            F.col(block_col).alias("blk"),
-            F.col(text_col).alias("__raw"),
-        )
-        .repartition(df.sparkSession.sparkContext.defaultParallelism, "doc")
+        fan_out(raw, "doc")
         .select("doc", "blk", tokens(F.col("__raw")).alias("t"))
         .select(
             "doc",
@@ -368,8 +349,7 @@ def embedding_near_dup_pairs(
     # would evaluate all O(n^2/2^b) pair predicates in a handful of tasks
     # (measured: 4 tasks grinding at sf1.0).  Hash on id: cheap, even, and
     # irrelevant to the join key (the bucket rides along).
-    npart = df.sparkSession.sparkContext.defaultParallelism
-    a, b = v.repartition(npart, "id").alias("a"), v.alias("b")
+    a, b = fan_out(v, "id").alias("a"), v.alias("b")
     cond = F.col("a.id") < F.col("b.id")
     if block_col:
         cond = cond & (F.col("a.blk") == F.col("b.blk"))
@@ -454,6 +434,13 @@ def embedding_lsh_dedup_pairs(
         [[int(math.floor(float(x) * float(scale))) for x in p] for p in planes],
         dtype=np.int64,
     ).T  # dim x n_planes
+    # Non-finite guard.  The expr kernel (ANSI session) buckets a NaN element
+    # as 0 and a NULL element as all-'0' bits, but both arrive here as NaN;
+    # an infinite or huge element overflows its int64 dot and raises, where
+    # astype(int64) would give platform-dependent bits.  No exact match is
+    # possible, so such a vector fails the query by id.  The |q| @ |qp|
+    # bound (NaN for NaN/inf) is float64: the factor-2 margin keeps it sound.
+    qp_abs = np.abs(qp_t).astype(np.float64)
 
     id_t = df.schema[id_col].dataType.simpleString()
     vec_t = df.schema[vec_col].dataType.simpleString()
@@ -464,7 +451,14 @@ def embedding_lsh_dedup_pairs(
                 yield pdf.assign(__lsh_bkt=pd.Series([], dtype=object))
                 continue
             m = np.array(pdf["__vec"].tolist(), dtype=np.float64)
-            q = np.floor(m * float(scale)).astype(np.int64)
+            f = np.floor(m * float(scale))
+            bad = ~(np.abs(f) @ qp_abs < 2.0**62).all(axis=1)
+            if bad.any():
+                raise ValueError(
+                    f"embedding vector {pdf['__id'][bad].iloc[0]} has a NULL, NaN, "
+                    "infinite or int64-overflowing element; it has no exact LSH bucket"
+                )
+            q = f.astype(np.int64)
             bits = np.where(q @ qp_t >= 0, "1", "0")
             out = pdf.copy()
             out["__lsh_bkt"] = ["".join(r) for r in bits]
@@ -680,7 +674,7 @@ def ngram_contamination(
     the per-doc count."""
     from ..functions.text import shingles_from_tokens, tokens
 
-    def distinct_shingles(df: DataFrame, fan_out: bool) -> DataFrame:
+    def distinct_shingles(df: DataFrame, corpus_side: bool) -> DataFrame:
         # corpus side (round-11): repartition the raw text by doc FIRST —
         # hashpartitioning(id) satisfies the downstream per-doc groupBy
         # (subset rule), so the exploded shingle stream never crosses an
@@ -689,15 +683,15 @@ def ngram_contamination(
         # The eval side stays un-fanned: its rows feed a DISTINCT keyed on
         # the shingle, which a doc-keyed exchange cannot serve.
         src = df.select(F.col(id_col), F.col(text_col).alias("__raw"))
-        if fan_out:
-            src = src.repartition(df.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
+        if corpus_side:
+            src = fan_out(src, F.col(id_col))
         tok = src.select(F.col(id_col), tokens(F.col("__raw")).alias("t")).where(F.size("t") >= k)
         return tok.select(
             F.col(id_col), F.explode(F.array_distinct(shingles_from_tokens(F.col("t"), k))).alias("s")
         )
 
-    corpus_sh = distinct_shingles(corpus, fan_out=True)
-    eval_sh = distinct_shingles(eval_df, fan_out=False).select("s").distinct()
+    corpus_sh = distinct_shingles(corpus, corpus_side=True)
+    eval_sh = distinct_shingles(eval_df, corpus_side=False).select("s").distinct()
     # ONE corpus pass (round-10): the old total/hits branches each re-ran
     # the corpus tokenize + shingle explode (the regex-heavy stage) and then
     # joined the two per-doc counts back together.  A broadcast LEFT join

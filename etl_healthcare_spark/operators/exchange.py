@@ -1,4 +1,8 @@
-"""Size-aware shuffle sizing for near-unique-key exact aggregations.
+"""Exchange sizing: the scan fan-out and size-aware shuffle partitions.
+
+``fan_out`` is the one repartition every tokenize/hash/explode chain puts
+in front of its CPU-bound stage (see its docstring).  The rest of this
+module sizes exchanges for near-unique-key exact aggregations.
 
 A reduce task that hash-aggregates a NEAR-UNIQUE key (zero/low reduction —
 e.g. candidate-key profiling, where the grouping set IS the table's key)
@@ -37,10 +41,24 @@ from pyspark.sql import DataFrame
 # optimizer-stats bytes per reduce task (see module docstring for the
 # stats-bytes -> in-memory multiplier reasoning)
 TARGET_STATS_BYTES = 8 << 20
-# guardrail against pathological stats (e.g. Long.MaxValue when a relation
-# reports unknown size): 2^16 tasks x 8 MiB target ~ 512 GiB of scan stats,
-# far past any single exchange this engine plans
+# guardrail against pathological stats: 2^16 tasks x 8 MiB target ~ 512 GiB
+# of scan stats, far past any single exchange this engine plans
 MAX_SHUFFLE_PARTITIONS = 65_536
+
+
+def fan_out(df: DataFrame, *keys) -> DataFrame:
+    """Hash-repartition ``df`` on ``keys`` into one partition per core.
+
+    * A single-file local scan arrives as ONE task; the regex, hash and
+      explode stages that follow would otherwise run serially.
+    * The count is explicit because AQE coalesces a bare
+      ``repartition(key)`` by bytes, down to ~2 tasks on raw text, which
+      serializes the CPU-bound stage again.
+    * Hash-partitioning on the doc key satisfies a downstream per-doc
+      ``groupBy`` (subset rule), so callers put projections AFTER this
+      exchange and the aggregate adds no second one.
+    """
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *keys)
 
 
 def sized_shuffle_partitions(
@@ -63,7 +81,12 @@ def sized_shuffle_partitions(
     cannot exceed ``target × session_default`` the sizing answer is the
     session default regardless of exact stats, so the pass is skipped —
     zero plan-time cost at toy scale, full sizing once the data is big
-    enough for the pass to matter (round-8 verdict item 6)."""
+    enough for the pass to matter (round-8 verdict item 6).
+
+    A frame without size statistics (``createDataFrame``, RDD-derived)
+    reports ``spark.sql.defaultSizeInBytes`` (Long.MaxValue unless set);
+    such an estimate says nothing about the data, so it also gets the
+    session default instead of the cap."""
     session_default = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     if (
         upper_bound_bytes is not None
@@ -71,4 +94,6 @@ def sized_shuffle_partitions(
     ):
         return session_default
     stats_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    if stats_bytes >= df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes():
+        return session_default
     return max(session_default, min(cap, -(-stats_bytes // target_stats_bytes)))

@@ -13,6 +13,13 @@ Design:
   hot path.  Batch shape (pandas DataFrame per partition slice) is exactly
   what a real decode (PIL/ffmpeg/torchcodec) would consume.
 
+The one kernel contract: every kernel below is a per-input-row function
+(``row_fn(*projected_values) -> iterable of output tuples``: one tuple for a
+header decoder, zero or more for a fan-out such as frame sampling) plus a
+declared output ``StructType``.  ``_arrow_kernel`` turns the pair into the
+``mapInPandas`` stage and derives each column's pandas dtype from the schema
+once, so no kernel builds its own pandas frame.
+
 Two kinds of kernel:
 
 * ``decode_media_meta`` — a REAL decode: container headers (PNG IHDR, BMP
@@ -61,6 +68,49 @@ def attach_media_meta(df: DataFrame, payload_col: str, modality: str, mime: str 
     )
 
 
+_INT_DTYPES = {T.IntegerType: "int32", T.LongType: "int64"}
+
+
+def _pandas_dtype(field: T.StructField) -> str:
+    """The pandas dtype Arrow converts to ``field`` exactly: a masked
+    ``Int32``/``Int64`` for a nullable int (numpy ints cannot hold NULL),
+    numpy ``int32``/``int64``, ``float64`` and ``bool`` otherwise,
+    ``object`` for strings, binary, arrays and maps."""
+    t = type(field.dataType)
+    if t in _INT_DTYPES:
+        return _INT_DTYPES[t].capitalize() if field.nullable else _INT_DTYPES[t]
+    return {T.DoubleType: "float64", T.BooleanType: "bool"}.get(t, "object")
+
+
+def _arrow_kernel(df: DataFrame, cols: list, schema: T.StructType, row_fn) -> DataFrame:
+    """``df.select(*cols)`` through ``row_fn`` as one Arrow-batched
+    mapInPandas stage: ``row_fn`` gets each projected row's values and
+    returns zero or more output tuples laid out like ``schema``."""
+    names = schema.fieldNames()
+    dtypes = [_pandas_dtype(f) for f in schema.fields]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            rows = [out for r in zip(*(b[c] for c in b.columns)) for out in row_fn(*r)]
+            columns = list(zip(*rows)) if rows else [()] * len(names)
+            yield pd.DataFrame({n: pd.Series(c, dtype=d) for n, c, d in zip(names, columns, dtypes)})
+
+    return df.select(*cols).mapInPandas(run, schema=schema)
+
+
+def _id_payload(id_col: str, payload_col: str) -> list:
+    return [F.col(id_col).alias("id"), F.col(payload_col).alias("payload")]
+
+
+def _walk_kernel(df: DataFrame, id_col: str, payload_col: str, schema: T.StructType, walk) -> DataFrame:
+    """(id, *walk(payload)) per row; a payload ``walk`` rejects (None)
+    yields NULL fields."""
+    nulls = (None,) * (len(schema.fields) - 1)
+    return _arrow_kernel(
+        df, _id_payload(id_col, payload_col), schema, lambda i, p: [(i, *(walk(p) or nulls))]
+    )
+
+
 DECODED_SCHEMA = T.StructType(
     [
         T.StructField("id", T.LongType(), False),
@@ -71,7 +121,7 @@ DECODED_SCHEMA = T.StructType(
 )
 
 
-def _fake_decode_batch(batch: pd.DataFrame) -> pd.DataFrame:
+def _fake_features(i, p):
     """Deterministic stand-in for a media decode + feature extraction.
 
     A real implementation would decode bytes (PIL / soundfile / ffmpeg) and
@@ -79,17 +129,7 @@ def _fake_decode_batch(batch: pd.DataFrame) -> pd.DataFrame:
     deterministic pseudo-feature from the payload bytes.  The Arrow batch
     shape, schema, and partitioning are the real contract.
     """
-    ids = batch["id"]
-    payloads = batch["payload"]
-    feat_mean = payloads.map(lambda b: (sum(b[:64]) / max(1, len(b[:64]))) if len(b) else None)
-    return pd.DataFrame(
-        {
-            "id": ids,
-            "byte_len": payloads.map(len),
-            "feat_mean": feat_mean,
-            "feat_dim": 64,
-        }
-    )
+    return [(i, len(p), sum(p[:64]) / len(p[:64]) if len(p) else None, 64)]
 
 
 def decode_features(df: DataFrame, id_col: str, payload_col: str, *, kernel: str) -> DataFrame:
@@ -108,13 +148,7 @@ def decode_features(df: DataFrame, id_col: str, payload_col: str, *, kernel: str
             "decode_media_meta, and real pixel/sample stats for uncompressed "
             "BMP/WAV (which need no libs) are pixel_sample_stats"
         )
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            yield _fake_decode_batch(b)
-
-    return src.mapInPandas(run, schema=DECODED_SCHEMA)
+    return _arrow_kernel(df, _id_payload(id_col, payload_col), DECODED_SCHEMA, _fake_features)
 
 
 # --- real header decode ------------------------------------------------------
@@ -136,6 +170,36 @@ _NONE6 = ("unknown", None, None, None, None, None)
 _JPEG_SOF = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
 
 
+def _wav_chunks(b: bytes):
+    """(chunk id, body offset, body size) of each RIFF/WAVE chunk after the
+    12-byte header; chunks are word-aligned."""
+    off = 12
+    while off + 8 <= len(b):
+        sz = struct.unpack("<I", b[off + 4 : off + 8])[0]
+        yield b[off : off + 4], off + 8, sz
+        off += 8 + sz + (sz & 1)
+
+
+def _pcm16_samples(b: bytes):
+    """The signed little-endian samples of the first ``data`` chunk after a
+    PCM16 ``fmt `` chunk, or None when ``b`` is not a PCM16 WAV."""
+    if b is None or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+        return None
+    try:
+        fmt_ok = False
+        for cid, body, sz in _wav_chunks(b):
+            if cid == b"fmt " and sz >= 16:
+                audio_fmt = struct.unpack("<H", b[body : body + 2])[0]
+                bits = struct.unpack("<H", b[body + 14 : body + 16])[0]
+                fmt_ok = audio_fmt == 1 and bits == 16
+            elif cid == b"data" and fmt_ok:
+                n = len(b[body : body + sz]) // 2
+                return struct.unpack(f"<{n}h", b[body : body + 2 * n])
+    except (struct.error, IndexError):
+        pass
+    return None
+
+
 def parse_media_header(b: bytes):
     """(kind, width, height, sample_rate, channels, bits) from container
     magic + header fields — PNG IHDR, BMP DIB, GIF logical screen descriptor,
@@ -154,15 +218,11 @@ def parse_media_header(b: bytes):
             w, h = struct.unpack("<HH", b[6:10])
             return ("gif", w, h, None, None, None)
         if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-            off = 12
-            while off + 8 <= len(b):
-                cid = b[off : off + 4]
-                sz = struct.unpack("<I", b[off + 4 : off + 8])[0]
-                if cid == b"fmt " and sz >= 16 and off + 24 <= len(b):
-                    ch, sr = struct.unpack("<HI", b[off + 10 : off + 16])
-                    bits = struct.unpack("<H", b[off + 22 : off + 24])[0]
+            for cid, body, sz in _wav_chunks(b):
+                if cid == b"fmt " and sz >= 16 and body + 16 <= len(b):
+                    ch, sr = struct.unpack("<HI", b[body + 2 : body + 8])
+                    bits = struct.unpack("<H", b[body + 14 : body + 16])[0]
                     return ("wav", None, None, sr, ch, bits)
-                off += 8 + sz + (sz & 1)  # chunks are word-aligned
             return _NONE6
         if b[:2] == b"\xff\xd8":
             off = 2
@@ -189,25 +249,12 @@ def decode_media_meta(df: DataFrame, id_col: str, payload_col: str) -> DataFrame
     the opaque ``binary`` payload inside the same Arrow-batched mapInPandas
     slot a pixel kernel occupies.  Map-only: embarrassingly parallel at any
     scale, no shuffle, payload bytes never leave the executor."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            parsed = [parse_media_header(p) for p in b["payload"]]
-            yield pd.DataFrame(
-                {
-                    "id": b["id"],
-                    "byte_len": b["payload"].map(lambda p: 0 if p is None else len(p)),
-                    "kind": pd.Series([p[0] for p in parsed], dtype="object"),
-                    "width": pd.Series([p[1] for p in parsed], dtype="Int32"),
-                    "height": pd.Series([p[2] for p in parsed], dtype="Int32"),
-                    "sample_rate": pd.Series([p[3] for p in parsed], dtype="Int32"),
-                    "channels": pd.Series([p[4] for p in parsed], dtype="Int32"),
-                    "bits": pd.Series([p[5] for p in parsed], dtype="Int32"),
-                }
-            )
-
-    return src.mapInPandas(run, schema=MEDIA_HEADER_SCHEMA)
+    return _arrow_kernel(
+        df,
+        _id_payload(id_col, payload_col),
+        MEDIA_HEADER_SCHEMA,
+        lambda i, p: [(i, 0 if p is None else len(p), *parse_media_header(p))],
+    )
 
 
 # --- payload synthesis (test fixtures as column expressions) ----------------
@@ -394,27 +441,14 @@ def decode_pixel_samples(b: bytes):
             if len(vals) != 3 * w * h:
                 return ("unknown",) + _NO_STATS[:4]
             return ("bmp", len(vals), sum(vals), min(vals), max(vals))
-        if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-            off = 12
-            fmt_ok = False
-            while off + 8 <= len(b):
-                cid = b[off : off + 4]
-                sz = struct.unpack("<I", b[off + 4 : off + 8])[0]
-                if cid == b"fmt " and sz >= 16:
-                    audio_fmt, ch = struct.unpack("<HH", b[off + 8 : off + 12])
-                    bits = struct.unpack("<H", b[off + 22 : off + 24])[0]
-                    fmt_ok = audio_fmt == 1 and bits == 16
-                elif cid == b"data" and fmt_ok:
-                    data = b[off + 8 : off + 8 + sz]
-                    n = len(data) // 2
-                    if n == 0:
-                        return ("wav", 0, 0, None, None)
-                    samples = struct.unpack(f"<{n}h", data[: 2 * n])
-                    return ("wav", n, sum(samples), min(samples), max(samples))
-                off += 8 + sz + (sz & 1)
     except (struct.error, IndexError):
-        pass
-    return ("unknown",) + _NO_STATS[:4]
+        return ("unknown",) + _NO_STATS[:4]
+    samples = _pcm16_samples(b)
+    if samples is None:
+        return ("unknown",) + _NO_STATS[:4]
+    if not samples:
+        return ("wav", 0, 0, None, None)
+    return ("wav", len(samples), sum(samples), min(samples), max(samples))
 
 
 def pixel_sample_stats(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
@@ -423,30 +457,11 @@ def pixel_sample_stats(df: DataFrame, id_col: str, payload_col: str) -> DataFram
     samples, decoded from the raw bytes inside the Arrow-batched mapInPandas
     kernel.  Map-only at any scale; the mean is one int-ratio division
     (cross-engine exact)."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
+    def stats(i, p):
+        kind, n, total, lo, hi = decode_pixel_samples(p)
+        return [(i, kind, n, total, lo, hi, total / n if n else None)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            parsed = [decode_pixel_samples(p) for p in b["payload"]]
-            yield pd.DataFrame(
-                {
-                    "id": b["id"],
-                    "kind": pd.Series([p[0] for p in parsed], dtype="object"),
-                    "n_vals": pd.Series([p[1] for p in parsed], dtype="Int64"),
-                    "sum_val": pd.Series([p[2] for p in parsed], dtype="Int64"),
-                    "min_val": pd.Series([p[3] for p in parsed], dtype="Int64"),
-                    "max_val": pd.Series([p[4] for p in parsed], dtype="Int64"),
-                    "mean_val": pd.Series(
-                        [
-                            (p[2] / p[1]) if p[1] else None
-                            for p in parsed
-                        ],
-                        dtype="float64",
-                    ),
-                }
-            )
-
-    return src.mapInPandas(run, schema=PIXEL_STATS_SCHEMA)
+    return _arrow_kernel(df, _id_payload(id_col, payload_col), PIXEL_STATS_SCHEMA, stats)
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -471,33 +486,14 @@ def resize_plan(df: DataFrame, id_col: str, width_col: str, height_col: str, max
     """
     import math
 
-    src = df.select(
-        F.col(id_col).alias("id"), F.col(width_col).alias("width"), F.col(height_col).alias("height")
-    )
+    def fit(i, w, h):
+        mx = max(w, h)
+        if mx <= max_side:
+            return [(i, w, h, w, h)]
+        return [(i, w, h, math.floor(w * max_side / mx), math.floor(h * max_side / mx))]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            m = b[["width", "height"]].max(axis=1)
-            scale_needed = m > max_side
-            new_w = [
-                int(math.floor(w * max_side / mx)) if s else int(w)
-                for w, mx, s in zip(b["width"], m, scale_needed)
-            ]
-            new_h = [
-                int(math.floor(h * max_side / mx)) if s else int(h)
-                for h, mx, s in zip(b["height"], m, scale_needed)
-            ]
-            yield pd.DataFrame(
-                {
-                    "id": b["id"],
-                    "width": b["width"],
-                    "height": b["height"],
-                    "new_width": pd.Series(new_w, dtype="int32"),
-                    "new_height": pd.Series(new_h, dtype="int32"),
-                }
-            )
-
-    return src.mapInPandas(run, schema=RESIZED_SCHEMA)
+    cols = [F.col(id_col).alias("id"), F.col(width_col).alias("width"), F.col(height_col).alias("height")]
+    return _arrow_kernel(df, cols, RESIZED_SCHEMA, fit)
 
 
 FRAME_SCHEMA = T.StructType(
@@ -524,37 +520,16 @@ def sample_frames(
     """
     import hashlib
 
-    src = df.select(
-        F.col(id_col).alias("id"),
-        F.col(duration_col).alias("duration_s"),
-        F.col(fps_col).alias("fps"),
-    )
+    def frames(vid, dur, fps):
+        n_frames = int(dur) * int(fps)
+        stride = max(1, n_frames // max_frames)
+        return [
+            (vid, idx, idx / int(fps), hashlib.sha256(f"{vid}:{idx}".encode()).hexdigest())
+            for idx in range(0, n_frames, stride)[:max_frames]
+        ]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, idxs, tss, shas = [], [], [], []
-            for vid, dur, fps in zip(b["id"], b["duration_s"], b["fps"]):
-                n_frames = int(dur) * int(fps)
-                stride = max(1, n_frames // max_frames)
-                k = 0
-                idx = 0
-                while idx < n_frames and k < max_frames:
-                    ids.append(vid)
-                    idxs.append(idx)
-                    tss.append(idx / int(fps))
-                    shas.append(hashlib.sha256(f"{vid}:{idx}".encode()).hexdigest())
-                    k += 1
-                    idx += stride
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int64"),
-                    "ts_s": pd.Series(tss, dtype="float64"),
-                    "frame_sha": pd.Series(shas, dtype="object"),
-                }
-            )
-
-    return src.mapInPandas(run, schema=FRAME_SCHEMA)
+    cols = [F.col(id_col).alias("id"), F.col(duration_col).alias("duration_s"), F.col(fps_col).alias("fps")]
+    return _arrow_kernel(df, cols, FRAME_SCHEMA, frames)
 
 
 
@@ -593,51 +568,17 @@ def audio_window_energy(
     multiply before the next shuffle, never across one.  Non-PCM16 payloads
     yield no rows (the gate is parse-level, same contract as
     decode_pixel_samples)."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
+    def windows(i, p):
+        samples = _pcm16_samples(p) or ()
+        out = []
+        for w0 in range(0, len(samples), win):  # [w*win, (w+1)*win) slices
+            chunk = samples[w0 : w0 + win]
+            energy = sum(v * v for v in chunk)
+            peak = max(abs(v) for v in chunk)
+            out.append((i, w0 // win, len(chunk), energy, peak, energy < silence_mean_sq * len(chunk)))
+        return out
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {k: [] for k in ("id", "win", "n_samples", "energy", "peak", "is_silence")}
-            for i, p in zip(b["id"], b["payload"]):
-                kind, n, _s, _mn, _mx = decode_pixel_samples(p)
-                if kind != "wav" or not n:
-                    continue
-                # re-decode the sample stream (decode_pixel_samples proved it
-                # parses); windows are [w*win, (w+1)*win) sample slices
-                off = 12
-                samples = None
-                while off + 8 <= len(p):
-                    cid = p[off : off + 4]
-                    sz = struct.unpack("<I", p[off + 4 : off + 8])[0]
-                    if cid == b"data":
-                        data = p[off + 8 : off + 8 + sz]
-                        m = len(data) // 2
-                        samples = struct.unpack(f"<{m}h", data[: 2 * m])
-                        break
-                    off += 8 + sz + (sz & 1)
-                if not samples:
-                    continue
-                for w0 in range(0, len(samples), win):
-                    chunk = samples[w0 : w0 + win]
-                    energy = sum(v * v for v in chunk)
-                    out["id"].append(i)
-                    out["win"].append(w0 // win)
-                    out["n_samples"].append(len(chunk))
-                    out["energy"].append(energy)
-                    out["peak"].append(max(abs(v) for v in chunk))
-                    out["is_silence"].append(energy < silence_mean_sq * len(chunk))
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(out["id"], dtype="int64"),
-                    "win": pd.Series(out["win"], dtype="int32"),
-                    "n_samples": pd.Series(out["n_samples"], dtype="int32"),
-                    "energy": pd.Series(out["energy"], dtype="int64"),
-                    "peak": pd.Series(out["peak"], dtype="int32"),
-                    "is_silence": pd.Series(out["is_silence"], dtype="bool"),
-                }
-            )
-
-    return src.mapInPandas(run, schema=AUDIO_WINDOW_SCHEMA)
+    return _arrow_kernel(df, _id_payload(id_col, payload_col), AUDIO_WINDOW_SCHEMA, windows)
 
 
 AHASH_SCHEMA = T.StructType(
@@ -699,15 +640,7 @@ def ahash64(b: bytes):
 
 def image_ahash(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
     """(id, ahash) via the Arrow-batched mapInPandas kernel — map-only."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            yield pd.DataFrame(
-                {"id": b["id"], "ahash": pd.Series([ahash64(p) for p in b["payload"]], dtype="object")}
-            )
-
-    return src.mapInPandas(run, schema=AHASH_SCHEMA)
+    return _arrow_kernel(df, _id_payload(id_col, payload_col), AHASH_SCHEMA, lambda i, p: [(i, ahash64(p))])
 
 
 def ahash_near_pairs(
@@ -856,22 +789,7 @@ def gif_frame_info(b: bytes):
 def gif_frames(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
     """(id, width, height, n_frames, total_delay_cs) via the Arrow kernel —
     map-only; undecodable payloads yield NULL fields."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            parsed = [gif_frame_info(p) for p in b["payload"]]
-            yield pd.DataFrame(
-                {
-                    "id": b["id"],
-                    "width": pd.Series([p[0] if p else None for p in parsed], dtype="Int32"),
-                    "height": pd.Series([p[1] if p else None for p in parsed], dtype="Int32"),
-                    "n_frames": pd.Series([p[2] if p else None for p in parsed], dtype="Int32"),
-                    "total_delay_cs": pd.Series([p[3] if p else None for p in parsed], dtype="Int64"),
-                }
-            )
-
-    return src.mapInPandas(run, schema=GIF_FRAMES_SCHEMA)
+    return _walk_kernel(df, id_col, payload_col, GIF_FRAMES_SCHEMA, gif_frame_info)
 
 
 AUDIO_AUTOCORR_SCHEMA = T.StructType(
@@ -899,46 +817,16 @@ def audio_autocorr(
     arithmetically and must match bit-for-bit (same contract as
     audio_window_energy).  Lag fan-out (max_lag+1 rows per clip) happens
     in-task; non-PCM16 payloads yield no rows."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
+    def lags(i, p):
+        s = _pcm16_samples(p)
+        if not s:
+            return []
+        return [
+            (i, k, max(0, len(s) - k), sum(s[t] * s[t + k] for t in range(len(s) - k)))
+            for k in range(max_lag + 1)
+        ]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {k: [] for k in ("id", "lag", "n_terms", "r")}
-            for i, p in zip(b["id"], b["payload"]):
-                kind, n, _s, _mn, _mx = decode_pixel_samples(p)
-                if kind != "wav" or not n:
-                    continue
-                off = 12
-                samples = None
-                while off + 8 <= len(p):
-                    cid = p[off : off + 4]
-                    sz = struct.unpack("<I", p[off + 4 : off + 8])[0]
-                    if cid == b"data":
-                        data = p[off + 8 : off + 8 + sz]
-                        m = len(data) // 2
-                        samples = struct.unpack(f"<{m}h", data[: 2 * m])
-                        break
-                    off += 8 + sz + (sz & 1)
-                if not samples:
-                    continue
-                for k in range(0, max_lag + 1):
-                    terms = [
-                        samples[t] * samples[t + k] for t in range(len(samples) - k)
-                    ]
-                    out["id"].append(i)
-                    out["lag"].append(k)
-                    out["n_terms"].append(len(terms))
-                    out["r"].append(sum(terms))
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(out["id"], dtype="int64"),
-                    "lag": pd.Series(out["lag"], dtype="int32"),
-                    "n_terms": pd.Series(out["n_terms"], dtype="int32"),
-                    "r": pd.Series(out["r"], dtype="int64"),
-                }
-            )
-
-    return src.mapInPandas(run, schema=AUDIO_AUTOCORR_SCHEMA)
+    return _arrow_kernel(df, _id_payload(id_col, payload_col), AUDIO_AUTOCORR_SCHEMA, lags)
 
 
 def synth_png_with_chunks(doc_id, width, height, n_text) -> Column:
@@ -1026,22 +914,7 @@ def png_chunks(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
     the image-metadata sidecar extraction (EXIF-class provenance capture)
     multimodal ingest runs before any pixel decode.  Map-only; undecodable
     payloads yield NULL fields."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            parsed = [png_chunk_info(p) for p in b["payload"]]
-            yield pd.DataFrame(
-                {
-                    "id": b["id"],
-                    "n_chunks": pd.Series([p[0] if p else None for p in parsed], dtype="Int32"),
-                    "n_text": pd.Series([p[1] if p else None for p in parsed], dtype="Int32"),
-                    "idat_bytes": pd.Series([p[2] if p else None for p in parsed], dtype="Int64"),
-                    "text_kv": [p[3] if p else None for p in parsed],
-                }
-            )
-
-    return src.mapInPandas(run, schema=PNG_CHUNKS_SCHEMA)
+    return _walk_kernel(df, id_col, payload_col, PNG_CHUNKS_SCHEMA, png_chunk_info)
 
 
 def _be16(c) -> Column:
@@ -1141,25 +1014,7 @@ TIFF_IFD_SCHEMA = T.StructType(
 def tiff_ifd(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
     """(id, byte_order, n_entries, width, height, orientation) via the Arrow
     kernel — map-only; undecodable payloads yield NULL fields."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            parsed = [tiff_ifd_info(p) for p in b["payload"]]
-            yield pd.DataFrame(
-                {
-                    "id": b["id"],
-                    "byte_order": [p[0] if p else None for p in parsed],
-                    "n_entries": pd.Series([p[1] if p else None for p in parsed], dtype="Int32"),
-                    "width": pd.Series([p[2] if p else None for p in parsed], dtype="Int32"),
-                    "height": pd.Series([p[3] if p else None for p in parsed], dtype="Int32"),
-                    "orientation": pd.Series(
-                        [p[4] if p else None for p in parsed], dtype="Int32"
-                    ),
-                }
-            )
-
-    return src.mapInPandas(run, schema=TIFF_IFD_SCHEMA)
+    return _walk_kernel(df, id_col, payload_col, TIFF_IFD_SCHEMA, tiff_ifd_info)
 
 
 # ---------------------------------------------------------------------------
@@ -1289,24 +1144,7 @@ def avi_container_info(df: DataFrame, id_col: str, payload_col: str) -> DataFram
     """(id, width, height, total_frames, us_per_frame, n_movi_chunks,
     movi_bytes) via the Arrow kernel — map-only; undecodable payloads
     yield NULL fields."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            parsed = [avi_info(p) for p in batch["payload"]]
-            yield pd.DataFrame(
-                {
-                    "id": batch["id"],
-                    "width": pd.Series([p[0] if p else None for p in parsed], dtype="Int32"),
-                    "height": pd.Series([p[1] if p else None for p in parsed], dtype="Int32"),
-                    "total_frames": pd.Series([p[2] if p else None for p in parsed], dtype="Int32"),
-                    "us_per_frame": pd.Series([p[3] if p else None for p in parsed], dtype="Int64"),
-                    "n_movi_chunks": pd.Series([p[4] if p else None for p in parsed], dtype="Int32"),
-                    "movi_bytes": pd.Series([p[5] if p else None for p in parsed], dtype="Int64"),
-                }
-            )
-
-    return src.mapInPandas(run, schema=AVI_INFO_SCHEMA)
+    return _walk_kernel(df, id_col, payload_col, AVI_INFO_SCHEMA, avi_info)
 
 
 # ---------------------------------------------------------------------------
@@ -1398,23 +1236,7 @@ DICOM_INFO_SCHEMA = T.StructType(
 def dicom_tags(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
     """(id, modality, patient_id, n_rows, n_cols, n_elements) via the Arrow
     kernel — map-only; undecodable payloads yield NULL fields."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            parsed = [dicom_info(p) for p in batch["payload"]]
-            yield pd.DataFrame(
-                {
-                    "id": batch["id"],
-                    "modality": [p[0] if p else None for p in parsed],
-                    "patient_id": [p[1] if p else None for p in parsed],
-                    "n_rows": pd.Series([p[2] if p else None for p in parsed], dtype="Int32"),
-                    "n_cols": pd.Series([p[3] if p else None for p in parsed], dtype="Int32"),
-                    "n_elements": pd.Series([p[4] if p else None for p in parsed], dtype="Int32"),
-                }
-            )
-
-    return src.mapInPandas(run, schema=DICOM_INFO_SCHEMA)
+    return _walk_kernel(df, id_col, payload_col, DICOM_INFO_SCHEMA, dicom_info)
 
 
 # ---------------------------------------------------------------------------
@@ -1538,26 +1360,7 @@ def mp4_container_info(df: DataFrame, id_col: str, payload_col: str) -> DataFram
     """(id, brand, timescale, duration, track_id, width, height,
     n_top_boxes, mdat_bytes) via the Arrow kernel — map-only; undecodable
     payloads yield NULL fields."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            parsed = [mp4_info(p) for p in batch["payload"]]
-            yield pd.DataFrame(
-                {
-                    "id": batch["id"],
-                    "brand": [p[0] if p else None for p in parsed],
-                    "timescale": pd.Series([p[1] if p else None for p in parsed], dtype="Int64"),
-                    "duration": pd.Series([p[2] if p else None for p in parsed], dtype="Int64"),
-                    "track_id": pd.Series([p[3] if p else None for p in parsed], dtype="Int64"),
-                    "width": pd.Series([p[4] if p else None for p in parsed], dtype="Int32"),
-                    "height": pd.Series([p[5] if p else None for p in parsed], dtype="Int32"),
-                    "n_top_boxes": pd.Series([p[6] if p else None for p in parsed], dtype="Int32"),
-                    "mdat_bytes": pd.Series([p[7] if p else None for p in parsed], dtype="Int64"),
-                }
-            )
-
-    return src.mapInPandas(run, schema=MP4_INFO_SCHEMA)
+    return _walk_kernel(df, id_col, payload_col, MP4_INFO_SCHEMA, mp4_info)
 
 
 # ---------------------------------------------------------------------------
@@ -1686,21 +1489,4 @@ def zip_info(b: bytes):
 def zip_central_dir(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
     """(id, n_entries, sum_usize, sum_csize, first_name, last_name,
     cd_offset) via the Arrow kernel — map-only."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            parsed = [zip_info(p) for p in batch["payload"]]
-            yield pd.DataFrame(
-                {
-                    "id": batch["id"],
-                    "n_entries": pd.Series([p[0] if p else None for p in parsed], dtype="Int32"),
-                    "sum_usize": pd.Series([p[1] if p else None for p in parsed], dtype="Int64"),
-                    "sum_csize": pd.Series([p[2] if p else None for p in parsed], dtype="Int64"),
-                    "first_name": [p[3] if p else None for p in parsed],
-                    "last_name": [p[4] if p else None for p in parsed],
-                    "cd_offset": pd.Series([p[5] if p else None for p in parsed], dtype="Int64"),
-                }
-            )
-
-    return src.mapInPandas(run, schema=ZIP_INFO_SCHEMA)
+    return _walk_kernel(df, id_col, payload_col, ZIP_INFO_SCHEMA, zip_info)

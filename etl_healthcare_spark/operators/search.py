@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokens
 from ..functions.materialize import materialize
+from .exchange import fan_out
 
 # BM25 constants k1=1.2, b=0.75 as exact rationals: with dl/avgdl = dl*N/L,
 #   tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl))  ==  22*L*tf / (10*L*tf + 3*L + 9*dl*N)
@@ -59,13 +60,10 @@ def bm25_scores(
 
         return f
 
-    # repartition: fan the regex tokenization out of a single-file scan
-    # partition (same note as dedup.simhash_fingerprints), then checkpoint
-    # the skinny (id, dl, tf...) frame so the stats aggregate and the
-    # scoring pass both read it instead of re-tokenizing the corpus
-    toks = docs.repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-    ).select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("t"))
+    # fan the regex tokenization out, then checkpoint the skinny (id, dl,
+    # tf...) frame so the stats aggregate and the scoring pass both read it
+    # instead of re-tokenizing the corpus
+    toks = fan_out(docs, F.col(id_col)).select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("t"))
     base = toks.select(
         "id",
         F.size("t").alias("dl"),
@@ -184,10 +182,8 @@ def index_build(
     # aggregate run post-shuffle at full parallelism (probed 0.50-0.67 ->
     # 0.22-0.31 s min-of-6 for the tf frame at sf0.1; plan-verified 1
     # exchange both ways).
-    npart = docs.sparkSession.sparkContext.defaultParallelism
     tf = (
-        docs.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__raw"))
-        .repartition(npart, "doc")
+        fan_out(docs.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__raw")), "doc")
         .select("doc", F.explode(tokens(F.col("__raw"))).alias("term"))
         .groupBy("term", "doc")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -353,16 +349,12 @@ def related_docs(
 
     from ..functions.text import shingles_from_tokens, tokens
 
-    # repartition the raw text by doc BEFORE the tokenize+shingle+sha chain
-    # (round-11, minhash_signatures' rule): the chain otherwise runs at scan
-    # parallelism — ONE task on a single-file local input.  At corpus scale
-    # this adds one text-sized exchange, ~2 % of the posting/pair shuffle
-    # volume this operator's own math bounds at ~45x the corpus.
-    tok = (
-        docs.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__raw"))
-        .repartition(docs.sparkSession.sparkContext.defaultParallelism, "doc")
-        .select("doc", tokens(F.col("__raw")).alias("t"))
-    )
+    # fan out BEFORE the tokenize+shingle+sha chain.  At corpus scale this
+    # adds one text-sized exchange, ~2 % of the posting/pair shuffle volume
+    # this operator's own math bounds at ~45x the corpus.
+    tok = fan_out(
+        docs.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__raw")), "doc"
+    ).select("doc", tokens(F.col("__raw")).alias("t"))
     # shingles join/aggregate as 48-bit sha256-prefix int64 keys, not raw
     # strings: at corpus scale the posting shuffle is the dominant byte
     # volume and an 8-byte key beats a ~40-byte text shingle ~5x (collisions

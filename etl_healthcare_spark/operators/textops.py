@@ -17,6 +17,7 @@ from ..functions.text import (
     tokens,
 )
 from ..functions.materialize import materialize
+from .exchange import fan_out
 
 
 def text_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -60,10 +61,8 @@ def fingerprints(df: DataFrame, text_col: str, id_col: str, k: int = 5) -> DataF
     # tokens materialized first — see shingles_from_tokens note in functions/text.py
     from ..functions.text import shingles_from_tokens, tokens
 
-    tok = (
-        df.select(F.col(id_col), F.col(text_col).alias("__raw"))
-        .repartition(df.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
-        .select(F.col(id_col), tokens(F.col("__raw")).alias("t"))
+    tok = fan_out(df.select(F.col(id_col), F.col(text_col).alias("__raw")), F.col(id_col)).select(
+        F.col(id_col), tokens(F.col("__raw")).alias("t")
     )
     hashed = F.transform(
         shingles_from_tokens(F.col("t"), k), lambda s: F.substring(F.sha2(s, 256), 1, 16)
@@ -879,16 +878,11 @@ def containment_pairs(
     """
     from ..functions.text import shingles_from_tokens, tokens
 
-    # repartition the raw text by doc BEFORE the tokenize+sha256 chain
-    # (round-11, minhash_signatures' rule): the chain otherwise runs at scan
-    # parallelism — ONE task on a single-file local input — inside the
-    # materialization job, and the checkpointed per-doc array blocks inherit
-    # that single partition for every downstream stage
-    toks = (
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__raw"))
-        .repartition(df.sparkSession.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", tokens(F.col("__raw")).alias("t"))
-    )
+    # fan out BEFORE the tokenize+sha256 chain: the checkpointed per-doc
+    # array blocks inherit its partitioning for every downstream stage
+    toks = fan_out(
+        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__raw")), "doc_id"
+    ).select("doc_id", tokens(F.col("__raw")).alias("t"))
     sh = F.when(F.size(F.col("t")) >= k, shingles_from_tokens(F.col("t"), k)).otherwise(
         F.array().cast("array<string>")
     )
@@ -1319,16 +1313,11 @@ def longest_shared_run(
     """
     from ..functions.text import shingles_from_tokens, tokens
 
-    # repartition the raw text by doc BEFORE the tokenize+sha256 chain
-    # (round-11, minhash_signatures' rule): the chain otherwise runs at scan
-    # parallelism — ONE task on a single-file local input — inside the
-    # materialization job, and the checkpointed per-doc array blocks inherit
-    # that single partition for every downstream stage
-    toks = (
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__raw"))
-        .repartition(df.sparkSession.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", tokens(F.col("__raw")).alias("t"))
-    )
+    # fan out BEFORE the tokenize+sha256 chain: the checkpointed per-doc
+    # array blocks inherit its partitioning for every downstream stage
+    toks = fan_out(
+        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__raw")), "doc_id"
+    ).select("doc_id", tokens(F.col("__raw")).alias("t"))
     sh = F.when(F.size(F.col("t")) >= k, shingles_from_tokens(F.col("t"), k)).otherwise(
         F.array().cast("array<string>")
     )
@@ -1511,16 +1500,11 @@ def novelty_scores(
     """
     from ..functions.text import shingles_from_tokens, tokens
 
-    # repartition the raw text by doc BEFORE the tokenize+sha256 chain
-    # (round-11, minhash_signatures' rule): the chain otherwise runs at scan
-    # parallelism — ONE task on a single-file local input — inside the
-    # materialization job, and the checkpointed per-doc array blocks inherit
-    # that single partition for every downstream stage
-    toks = (
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__raw"))
-        .repartition(df.sparkSession.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", tokens(F.col("__raw")).alias("t"))
-    )
+    # fan out BEFORE the tokenize+sha256 chain: the checkpointed per-doc
+    # array blocks inherit its partitioning for every downstream stage
+    toks = fan_out(
+        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__raw")), "doc_id"
+    ).select("doc_id", tokens(F.col("__raw")).alias("t"))
     sh = F.when(F.size(F.col("t")) >= k, shingles_from_tokens(F.col("t"), k)).otherwise(
         F.array().cast("array<string>")
     )

@@ -790,18 +790,15 @@ from . import registry_opsdiag  # noqa: E402,F401
 # whatever order the modules happened to register in.  The remaining queries
 # follow in their original registration order and are checked by the local
 # harness (tools/check.py) at every scale factor.
-# Round-11 rotation: the never-driver-confirmed backlog hit ZERO in r10
-# (299/299 names have at least one green driver row), so staleness is now
-# the whole rotation signal — after the 9 pins and the family probes not
-# fresh from r10's CORRECTNESS file, slots go to the names whose last green
-# confirmation is OLDEST (rounds 1-2 era: q5/q6, g2-g5, j1-j5, w1-w6,
-# p2-p13 …), re-verifying the outermost evidence first.  Family coverage
-# keeps the ONE-ROUND CARRY-OVER policy (round-9 verdict item 2): a family
-# probe is satisfied by an in-window member OR a member hash-green in the
-# immediately-preceding round's CORRECTNESS file.  The plan suite
-# (tests/test_plans.py::test_driver_window_spans_every_family…) holds the
-# invariant "every family has driver-grade evidence no older than one
-# round".  tools/rotate_window.py computes the rotation mechanically.
+# Rotation: the never-driver-confirmed backlog is ZERO (299/299 names have
+# at least one green driver row), so staleness is the whole rotation signal
+# — after the 9 pins and one oracle-backed member of EVERY family, slots go
+# to the names whose last green confirmation is OLDEST (rounds 1-2 era:
+# q5/q6, g2-g5, j1-j5, w1-w6, p2-p13 …), re-verifying the outermost
+# evidence first.  Family coverage is a STATIC rule: every family has an
+# in-window member, whatever the newest CORRECTNESS file says.  The plan
+# suite (tests/test_plans.py::test_driver_window_spans_every_family…) holds
+# it, and tools/rotate_window.py computes the rotation mechanically.
 DRIVER_WINDOW: list[str] = [
     # core re-verify pins (cheap, every-round anchors)
     "q2_observations_by_patient",
@@ -813,7 +810,7 @@ DRIVER_WINDOW: list[str] = [
     "p1_csv_to_dto",
     "v2_dto_validation",
     "u1_idempotent_merge",
-    # family probes not fresh from r10 + stalest-confirmed rotation
+    # one member of every family + stalest-confirmed rotation
     "set_ops",
     "g10_pivot",
     "sq_subqueries",
@@ -827,6 +824,11 @@ DRIVER_WINDOW: list[str] = [
     "sim_topk_cosine",
     "maint_compaction_plan",
     "privacy_k_anonymity",
+    "text_vocab_growth",
+    "sample_cluster_weighted",
+    "mm_mp4_boxes",
+    "sketch_source_similarity",
+    "eval_cohens_kappa",
     "q6_tenant_scan",
     "q5_health_report",
     "g2_invalid_ratio",
@@ -850,11 +852,6 @@ DRIVER_WINDOW: list[str] = [
     "dedup_simhash",
     "q1_get_patient",
     "g5_percentiles",
-    "j2_orders_customer",
-    "w1_ranking",
-    "w6_locf_gapfill",
-    "p6_fhir_observation",
-    "u2_batch_dedup",
 ]
 
 _missing = [n for n in DRIVER_WINDOW if n not in REGISTRY]

@@ -1,6 +1,7 @@
 """LLM-pipeline operators: dedup finds planted duplicates, ANN agrees with
 brute force on its bucket, multimodal plumbing produces the contract schema."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_healthcare_spark.operators.dedup import (
@@ -508,3 +509,28 @@ def test_embedding_lsh_bucket_gemm_kernel_matches_expression(spark):
         ).collect()
     )
     assert expr == gemm and len(expr) > 0
+
+    # non-finite inputs.  Read off the expr kernel: a NaN element quantizes
+    # to 0, a NULL element makes every bit '0' — yet both reach the Arrow
+    # kernel as NaN, and an infinite element overflows the int64 dot.  No
+    # exact match exists, so the GEMM path fails the query naming the row.
+    from etl_healthcare_spark.functions.vectors import hyperplane_bucket_exact
+
+    base = [0.25, -0.125, 0.375, -0.25, 0.125, 0.5, -0.375, 0.0625]
+    odd = spark.createDataFrame(
+        [(100, [float("nan")] + base[1:]), (101, [None] + base[1:]), (102, [0.0] + base[1:]),
+         (103, [float("inf")] + base[1:]), (104, [float("-inf")] + base[1:])],
+        "vec_id long, embedding array<float>",
+    )
+    bkt = dict(
+        odd.where("vec_id <= 102")
+        .select("vec_id", hyperplane_bucket_exact(F.col("embedding"), planes).alias("b"))
+        .collect()
+    )
+    assert bkt[100] == bkt[102] and bkt[101] == "0000" != bkt[102]
+    for vid in (100, 101, 103, 104):
+        with pytest.raises(Exception, match=f"ValueError: embedding vector {vid} has"):
+            embedding_lsh_dedup_pairs(
+                df.unionByName(odd.where(F.col("vec_id") == vid)),
+                "embedding", "vec_id", planes, kernel="arrow", **kw,
+            ).collect()

@@ -2,16 +2,14 @@
 
 The external harness confirms only the first 50 registry entries per round
 (CORRECTNESS_r{N}.json), so external evidence accumulates one window at a
-time.  Policy (round-10, the one-round carry-over era):
+time.  Policy:
 
 * 9 core slots are PINNED (cheap every-round anchors).
-* family coverage uses ONE-ROUND CARRY-OVER: a family probe is satisfied by
-  an in-window member OR a member hash-green in the LATEST round's
-  CORRECTNESS file, so already-fresh families don't burn slots while any
-  name still lacks a driver row (the r9 policy of forcing every family
-  in-window left a 13-name residue the r10 window could have drained).
+* family coverage is STATIC: every family probe gets an in-window member,
+  whatever the newest CORRECTNESS file says (the same rule
+  tests/test_plans.py holds the live window to).
 * the remaining slots rotate, preferring queries that have NEVER appeared
-  green in any round's CORRECTNESS file.
+  green in any round's CORRECTNESS file, then the stalest-confirmed.
 
 Usage: python tools/rotate_window.py
 Prints the proposed 50-name window (pinned first) plus the remaining
@@ -47,8 +45,7 @@ PINNED = [
 ]
 
 # family probes the plan test asserts (beyond those satisfied by PINNED);
-# under carry-over a probe only consumes a slot when the family was NOT
-# green in the latest round's CORRECTNESS file
+# each one consumes an in-window slot
 ROTATING_FAMILY_PROBES = [
     "set_ops",
     "g10_",
@@ -220,29 +217,11 @@ def propose(repo_root: Path | None = None) -> tuple[list[str], list[str], list[s
     queue = fresh_external + [n for n in fresh_driver if n not in fresh_external]
     queue.sort(key=lambda n: (n not in fresh_external, _priority_rank(n)))
 
-    # carry-over: families green in the LATEST round's CORRECTNESS file are
-    # fresh for one round and need no in-window slot (plan-suite policy)
-    latest, latest_green = 0, set()
-    for f in glob.glob(str(root / "CORRECTNESS_r*.json")):
-        digits = Path(f).stem.split("_r")[-1]
-        if digits.isdigit() and int(digits) >= latest:
-            latest = int(digits)
-            latest_green = {
-                n
-                for n, e in json.load(open(f)).items()
-                if e.get("rows_match")
-                and e.get("schema_match")
-                and e.get("hash_match")
-                and e.get("err") is None
-            }
-
     window = list(PINNED)
-    # cover every rotating family probe NOT fresh from the latest round:
-    # with a queued name if one exists, else the youngest confirmed member
+    # cover every rotating family probe in-window: with a queued name if
+    # one exists, else the family's first oracle member
     for probe in ROTATING_FAMILY_PROBES:
-        if any(n.startswith(probe) for n in window) or any(
-            n.startswith(probe) for n in latest_green
-        ):
+        if any(n.startswith(probe) for n in window):
             continue
         pool = [n for n in queue if n.startswith(probe)] or [
             n for n in oracle if n.startswith(probe)
